@@ -213,6 +213,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def score(batches):
         import numpy as np
+        import pyarrow.compute as pc
 
         for b in batches:
             n = b.num_rows
@@ -222,13 +223,17 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             keep = ~np.isnan(sim) & (sim >= NEAR_DUP_COSINE)
             if not keep.any():
                 continue
-            la = b.column("label_a").to_numpy(zero_copy_only=False)[keep]
-            lb = b.column("label_b").to_numpy(zero_copy_only=False)[keep]
+            # SQL equality: a NULL label gives a NULL same_label, as the
+            # oracle's `a.label = b.label` does.
+            mask = pa.array(keep)
+            same_label = pc.equal(
+                b.column("label_a").filter(mask), b.column("label_b").filter(mask)
+            )
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.asarray(b.column("vec_a"), dtype=np.int64)[keep]),
                     pa.array(np.asarray(b.column("vec_b"), dtype=np.int64)[keep]),
-                    pa.array(la == lb),
+                    same_label,
                     pa.array(sim[keep]),
                 ],
                 schema=pa.schema(

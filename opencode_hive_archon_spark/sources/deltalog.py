@@ -18,12 +18,12 @@ the subset needed for a correct single-cluster lakehouse table:
   (``schemaString`` is the Spark StructType JSON, exactly what
   delta-spark writes) / ``add`` (with ``partitionValues``, ``size`` and a
   ``stats`` JSON carrying ``numRecords``) / ``remove`` / ``commitInfo``.
-- **Snapshot reconstruction (log replay) as a Spark job**: commit files
-  are read with an explicit action schema (never inferred), versions come
-  from the file names, and the live file set is last-writer-wins per path
-  (``max_by`` over version) — an add survives unless a later remove
-  covers it. The driver only ever collects the live FILE LIST, which is
-  the same metadata any parquet FileIndex needs to plan the scan.
+- **Snapshot reconstruction (log replay) on the driver**: commit files
+  and checkpoint parts are parsed against an explicit action schema
+  (never inferred), versions come from the file names, and the live file
+  set is last-writer-wins per path — an add survives unless a later
+  remove covers it. The result is the live FILE LIST, the same metadata
+  any parquet FileIndex needs to plan the scan; no Spark job runs.
 - **Parquet checkpoints + ``_last_checkpoint``** every
   ``CHECKPOINT_INTERVAL`` commits: replay cost is one checkpoint parquet
   plus < INTERVAL JSON files no matter how many commits the table has —
@@ -189,8 +189,8 @@ class DeltaProtocolError(RuntimeError):
 
 
 # Explicit action schema for log replay — the spec's action envelope.
-# Inference is banned on the engine read path (schema drift must fail
-# loudly), and commit files are too small for an inference pass anyway.
+# Replay normalizes every parsed action against it (never inferred), and
+# checkpoints are written with it.
 _PROTOCOL_T = T.StructType([
     T.StructField("minReaderVersion", T.IntegerType()),
     T.StructField("minWriterVersion", T.IntegerType()),
@@ -235,18 +235,13 @@ _REMOVE_T = T.StructType([
     T.StructField("dataChange", T.BooleanType()),
     T.StructField("deletionVector", _DV_T),
 ])
-_COMMITINFO_T = T.StructType([
-    T.StructField("timestamp", T.LongType()),
-    T.StructField("operation", T.StringType()),
-    T.StructField("operationParameters", T.MapType(T.StringType(), T.StringType())),
-])
 _TXN_T = T.StructType([
     T.StructField("appId", T.StringType()),
     T.StructField("version", T.LongType()),
     T.StructField("lastUpdated", T.LongType()),
 ])
-# Checkpoints carry table STATE (incl. txn watermarks, no commitInfo, per
-# spec); commits may carry all six. unionByName reconciles the two.
+# The table-STATE actions replay reconciles and checkpoints carry (incl.
+# txn watermarks; commitInfo is not state, per spec).
 STATE_SCHEMA = T.StructType([
     T.StructField("protocol", _PROTOCOL_T),
     T.StructField("metaData", _METADATA_T),
@@ -254,9 +249,6 @@ STATE_SCHEMA = T.StructType([
     T.StructField("remove", _REMOVE_T),
     T.StructField("txn", _TXN_T),
 ])
-ACTION_SCHEMA = T.StructType(
-    list(STATE_SCHEMA.fields) + [T.StructField("commitInfo", _COMMITINFO_T)]
-)
 
 
 # --------------------------------------------------------------------------
@@ -417,27 +409,37 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
-def _peek_meta(spark: SparkSession, table: str, version: int) -> dict | None:
-    """Newest retained metaData action at or below `version`, driver-side:
-    scan commit JSONs newest-first (a metaData action can appear in ANY
-    commit — overwrite-with-new-schema writes one, so v0 alone is stale
-    after schema evolution). Falls back to a checkpoint replay when every
-    retained JSON predates the checkpoint. The scan is metadata-sized:
-    commit files are small and the retained tail is GC-bounded."""
+def _peek_meta(table: str, version: int | None = None) -> dict:
+    """Newest retained metaData action at or below `version` (latest if
+    None), without a SparkSession (a streaming DataSource.schema() runs
+    before any job): scan commit JSONs newest-first (a metaData action
+    can appear in ANY commit — overwrite-with-new-schema writes one, so
+    v0 alone is stale after schema evolution), else read only the
+    metaData column of the newest checkpoint at or below `version`. The
+    scan is metadata-sized: commit files are small and the retained tail
+    is GC-bounded. Raises DeltaProtocolError when the log holds none."""
     for v in sorted(_list_log(table, _VERSION_RE), reverse=True):
-        if v > version:
+        if version is not None and v > version:
             continue
         with open(_version_file(table, v)) as fh:
             for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    return action["metaData"]
-    try:
-        return _snapshot_state(spark, table, version)["meta"]
-    except DeltaProtocolError:
-        return None
+                if line.strip():
+                    action = json.loads(line)
+                    if "metaData" in action:
+                        return action["metaData"]
+    ckpts = [
+        c for c in _checkpoint_versions(table)
+        if version is None or c <= version
+    ]
+    if ckpts:
+        import pyarrow.parquet as pq
+
+        for part in _checkpoint_parts(table, max(ckpts)):
+            col = pq.read_table(part, columns=["metaData"]).column("metaData")
+            for meta in col.to_pylist():
+                if meta and meta.get("schemaString"):
+                    return _norm_action(meta, _METADATA_T)
+    raise DeltaProtocolError(f"no metaData action found in log of {table}")
 
 
 def _same_shape(a_json: str | None, b_json: str) -> bool:
@@ -750,26 +752,12 @@ def _stage_data_files(
 # snapshot reconstruction (log replay)
 # --------------------------------------------------------------------------
 
-# Driver-side replay size gate (bytes of checkpoint parts + JSON tail).
-# Snapshot state is DRIVER-SIZED by contract — the Spark replay already
-# collect()s the full live-file list, the tombstones and the txn map to the
-# driver — so for a metadata slice this small, reconciling it with Spark
-# jobs only adds 4-5 scheduler round-trips and shuffles per replay (guide
-# §1.2 step 1: the verbs call this once or more per commit). Above the
-# gate (a 100 TB table's checkpoint is GBs of parquet) the distributed
-# replay below takes over unchanged — same reconciliation, same results,
-# pinned by tests/test_deltalog.py::test_driver_and_spark_replay_agree.
-_DRIVER_REPLAY_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DRIVER_REPLAY_MAX_BYTES", str(8 << 20))
-)
-
-
 def _norm_action(val, dtype):
     """Normalize one parsed action value against the declared Spark type:
     drop undeclared fields, materialize missing ones as None, coerce
     numerics/bools, and turn pyarrow's [(k, v), ...] map encoding into a
-    dict — so driver-parsed actions are indistinguishable from the Spark
-    path's Row.asDict(recursive=True) output."""
+    dict — so checkpoint rows and JSON commit lines yield identical
+    action dicts."""
     if val is None:
         return None
     if isinstance(dtype, T.StructType):
@@ -795,18 +783,23 @@ def _norm_action(val, dtype):
 def _iter_log_actions(table: str, ckpt_v: int | None, need: list[int]):
     """Yield (version, action_name, normalized_dict) in ascending version
     order: the checkpoint's state rows first (all tagged with the
-    checkpoint version, exactly like the Spark path's _v literal), then
-    each JSON commit's lines."""
+    checkpoint version), then each JSON commit's lines. Checkpoint parts
+    are read one record batch at a time and only their STATE_SCHEMA
+    columns, so a multi-GB checkpoint is never turned into Python
+    objects all at once."""
     kinds = {f.name: f.dataType for f in STATE_SCHEMA.fields}
     if ckpt_v is not None:
         import pyarrow.parquet as pq
 
         for part in _checkpoint_parts(table, ckpt_v):
-            for row in pq.read_table(part).to_pylist():
-                for kind, dtype in kinds.items():
-                    v = row.get(kind)
-                    if v is not None:
-                        yield ckpt_v, kind, _norm_action(v, dtype)
+            pf = pq.ParquetFile(part)
+            cols = [k for k in kinds if k in pf.schema_arrow.names]
+            for batch in pf.iter_batches(columns=cols):
+                for row in batch.to_pylist():
+                    for kind in cols:
+                        v = row[kind]
+                        if v is not None:
+                            yield ckpt_v, kind, _norm_action(v, kinds[kind])
     for ver in need:
         with open(_version_file(table, ver)) as fh:
             for line in fh:
@@ -820,71 +813,53 @@ def _iter_log_actions(table: str, ckpt_v: int | None, need: list[int]):
                         yield ver, kind, _norm_action(v, dtype)
 
 
-def _replay_slice_bytes(table: str, ckpt_v: int | None, need: list[int]) -> int:
-    total = 0
-    try:
-        if ckpt_v is not None:
-            for part in _checkpoint_parts(table, ckpt_v):
-                total += os.path.getsize(part)
-        for ver in need:
-            total += os.path.getsize(_version_file(table, ver))
-    except OSError:
-        return _DRIVER_REPLAY_MAX_BYTES + 1  # racing GC: use the Spark path
-    return total
-
-
 def _replay_driver(table: str, ckpt_v: int | None, need: list[int]) -> dict:
-    """Driver-side log reconciliation — same rules as the Spark path:
-    file identity = path + DV id, last-writer-wins per key, live iff the
-    newest add outranks the newest remove (a same-version add+remove
-    tombstones), newest metaData/protocol win, txns keep the max version
-    per appId."""
-    last_add: dict[str, tuple[int, dict]] = {}
-    last_rem: dict[str, tuple[int, dict]] = {}
-    meta: tuple[int, dict] | None = None
-    protocol: tuple[int, dict] | None = None
+    """Log reconciliation on the driver: file identity = path + DV id (a
+    DV update's same-commit remove(P, oldDV) + add(P, newDV) are distinct
+    keys, so the new incarnation goes live while the old one
+    tombstones), last-writer-wins per key, live iff the newest add
+    outranks the newest remove (a same-version add+remove tombstones),
+    newest metaData/protocol win, txns keep the max version per appId.
+    Actions that lack a field the spec requires are skipped: an add/remove
+    with no path names no file, a txn with no version sets no
+    watermark."""
+    last: dict[str, dict[str, tuple[int, dict]]] = {"add": {}, "remove": {}}
+    meta: dict | None = None
+    protocol: dict | None = None
     txns: dict[str, int] = {}
-
-    def _fkey(d: dict) -> str:
-        dv = d.get("deletionVector") or {}
-        return f"{d['path']}@@{dv.get('pathOrInlineDv') or ''}"
-
+    # Actions arrive in ascending version order, so plain assignment
+    # keeps the newest one.
     for ver, kind, act in _iter_log_actions(table, ckpt_v, need):
-        if kind == "add":
-            k = _fkey(act)
-            if k not in last_add or ver >= last_add[k][0]:
-                last_add[k] = (ver, act)
-        elif kind == "remove":
-            k = _fkey(act)
-            if k not in last_rem or ver >= last_rem[k][0]:
-                last_rem[k] = (ver, act)
+        if kind in last:
+            if act["path"] is not None:
+                dv = act["deletionVector"] or {}
+                key = f"{act['path']}@@{dv.get('pathOrInlineDv') or ''}"
+                last[kind][key] = (ver, act)
         elif kind == "metaData":
-            if act.get("schemaString") is not None and (
-                meta is None or ver >= meta[0]
-            ):
-                meta = (ver, act)
+            if act["schemaString"] is not None:
+                meta = act
         elif kind == "protocol":
-            if act.get("minReaderVersion") is not None and (
-                protocol is None or ver >= protocol[0]
-            ):
-                protocol = (ver, act)
+            if act["minReaderVersion"] is not None:
+                protocol = act
         elif kind == "txn":
-            app = act.get("appId")
-            if app is not None:
-                v = int(act.get("version") or 0)
-                if txns.get(app, -(1 << 62)) < v:
-                    txns[app] = v
+            app, v = act["appId"], act["version"]
+            if app is not None and v is not None:
+                txns[app] = max(v, txns.get(app, v))
 
     def _clean(d: dict) -> dict:
         if d.get("deletionVector") is None:
             d.pop("deletionVector", None)
         return d
 
+    last_add, last_rem = last["add"], last["remove"]
     files = [
         _clean(add)
         for k, (av, add) in last_add.items()
         if k not in last_rem or av > last_rem[k][0]
     ]
+    # Tombstones: file incarnations whose newest action is a remove —
+    # retained in state (and in checkpoints, per spec) so VACUUM can find
+    # the physical files after the removing commits are GC'd.
     tombstones = [
         _clean(rem)
         for k, (rv, rem) in last_rem.items()
@@ -893,16 +868,16 @@ def _replay_driver(table: str, ckpt_v: int | None, need: list[int]) -> dict:
     return {
         "files": files,
         "tombstones": tombstones,
-        "meta": None if meta is None else meta[1],
+        "meta": meta,
         "protocol": None if protocol is None else {
-            k: v for k, v in protocol[1].items() if v is not None
+            k: v for k, v in protocol.items() if v is not None
         },
         "txns": txns,
     }
 
 
 def _check_reader_protocol(protocol: dict) -> None:
-    """Reader-version / table-features gate, shared by both replay paths."""
+    """Reader-version / table-features gate of every snapshot read."""
     mrv = protocol["minReaderVersion"]
     if mrv == 3:
         # Table features (reader 3): supported iff every declared
@@ -937,13 +912,10 @@ def _snapshot_state(
     gap in the required JSON range means metadata cleanup removed commits
     this read needs — fail loudly.
 
-    Two replay engines, same reconciliation: below
-    _DRIVER_REPLAY_MAX_BYTES the slice is parsed and reconciled on the
-    driver (the state is driver-sized either way — this function has
-    always collect()ed the live-file list), avoiding 4-5 Spark jobs per
-    replay; above it (100 TB tables: multi-GB checkpoints) the
-    distributed Spark reconciliation runs as before. Equivalence is
-    pinned by tests/test_deltalog.py::test_driver_and_spark_replay_agree."""
+    The slice is parsed and reconciled on the driver (`_replay_driver`)
+    and starts no Spark job: the state is driver-sized by contract —
+    every scan plans from the live-file list — which is how Delta Kernel
+    and delta-rs replay too. `spark` is unused."""
     versions = _list_log(table, _VERSION_RE)
     ckpts = _checkpoint_versions(table)
     # `newest` counts incomplete-checkpoint versions too: the table HAS
@@ -969,136 +941,21 @@ def _snapshot_state(
             f"have {have} — versions at or before a checkpoint may be "
             "GC'd; time travel older than the earliest checkpoint is gone"
         )
-    if _replay_slice_bytes(table, ckpt_v, need) <= _DRIVER_REPLAY_MAX_BYTES:
-        st = _replay_driver(table, ckpt_v, need)
-        if st["meta"] is None:
-            raise DeltaProtocolError(f"no metaData action in log of {table}")
-        protocol = st["protocol"] or {
-            "minReaderVersion": 1, "minWriterVersion": 2,
-        }
-        _check_reader_protocol(protocol)
-        meta = st["meta"]
-        return {
-            "txns": st["txns"],
-            "tombstones": st["tombstones"],
-            "protocol": protocol,
-            "version": target,
-            "schema": T.StructType.fromJson(json.loads(meta["schemaString"])),
-            "partition_columns": list(meta["partitionColumns"] or []),
-            "meta": meta,
-            "files": st["files"],
-            "checkpoint_version": ckpt_v,
-            "json_replayed": len(need),
-        }
-    parts: list[DataFrame] = []
-    if ckpt_v is not None:
-        ck = spark.read.schema(STATE_SCHEMA).parquet(
-            *_checkpoint_parts(table, ckpt_v)
-        )
-        parts.append(ck.withColumn("_v", F.lit(ckpt_v).cast("long")))
-    if need:
-        j = spark.read.schema(ACTION_SCHEMA).json(
-            [_version_file(table, v) for v in need]
-        )
-        parts.append(
-            j.withColumn(
-                "_v",
-                F.regexp_extract(
-                    F.input_file_name(), r"(\d{20})\.json", 1
-                ).cast("long"),
-            ).drop("commitInfo")
-        )
-    acts = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-    )
-    # File identity is path + DV id (delta's reconciliation key): a DV
-    # update commits remove(P, oldDV) + add(P, newDV) in ONE version —
-    # distinct keys, so the new incarnation goes live while the old one
-    # tombstones, with no same-version add-vs-remove tie to break.
-    def _key(side: str):
-        return F.concat_ws(
-            "@@",
-            F.col(f"{side}.path"),
-            F.coalesce(
-                F.col(f"{side}.deletionVector.pathOrInlineDv"), F.lit("")
-            ),
-        )
-
-    adds = acts.filter(F.col("add.path").isNotNull()).select(
-        _key("add").alias("fkey"), F.col("_v").alias("av"), "add"
-    )
-    rems = acts.filter(F.col("remove.path").isNotNull()).select(
-        _key("remove").alias("fkey"), F.col("_v").alias("rv"), "remove"
-    )
-    last_add = adds.groupBy("fkey").agg(
-        F.max_by("add", "av").alias("add"), F.max("av").alias("av")
-    )
-    last_rem = rems.groupBy("fkey").agg(
-        F.max_by("remove", "rv").alias("remove"), F.max("rv").alias("rv")
-    )
-    joined = last_add.join(last_rem, "fkey", "full")
-    live = joined.filter(
-        F.col("add").isNotNull()
-        & (F.col("rv").isNull() | (F.col("av") > F.col("rv")))
-    ).select("add")
-
-    def _clean(d: dict) -> dict:
-        if d.get("deletionVector") is None:
-            d.pop("deletionVector", None)
-        return d
-
-    files = [_clean(row["add"].asDict(recursive=True)) for row in live.collect()]
-    # Tombstones: file incarnations whose newest action is a remove —
-    # retained in state (and in checkpoints, per spec) so VACUUM can find
-    # the physical files after the removing commits are GC'd.
-    tombstones = [
-        _clean(row["remove"].asDict(recursive=True))
-        for row in joined.filter(
-            F.col("remove").isNotNull()
-            & (F.col("av").isNull() | (F.col("rv") >= F.col("av")))
-        ).select("remove").collect()
-    ]
-    meta_rows = (
-        acts.filter(F.col("metaData.schemaString").isNotNull())
-        .orderBy(F.col("_v").desc())
-        .select("metaData")
-        .limit(1)
-        .collect()
-    )
-    if not meta_rows:
+    st = _replay_driver(table, ckpt_v, need)
+    meta = st["meta"]
+    if meta is None:
         raise DeltaProtocolError(f"no metaData action in log of {table}")
-    meta = meta_rows[0]["metaData"]
-    proto_rows = (
-        acts.filter(F.col("protocol.minReaderVersion").isNotNull())
-        .orderBy(F.col("_v").desc())
-        .select("protocol")
-        .limit(1)
-        .collect()
-    )
-    protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
-    if proto_rows:
-        protocol = {
-            k: v
-            for k, v in proto_rows[0]["protocol"].asDict().items()
-            if v is not None
-        }
-        _check_reader_protocol(protocol)
-    txns = {
-        r["appId"]: r["v"]
-        for r in acts.filter(F.col("txn.appId").isNotNull())
-        .groupBy(F.col("txn.appId").alias("appId"))
-        .agg(F.max("txn.version").alias("v"))
-        .collect()
-    }
+    protocol = st["protocol"] or {"minReaderVersion": 1, "minWriterVersion": 2}
+    _check_reader_protocol(protocol)
     return {
-        "txns": txns,
-        "tombstones": tombstones,
+        "txns": st["txns"],
+        "tombstones": st["tombstones"],
         "protocol": protocol,
         "version": target,
         "schema": T.StructType.fromJson(json.loads(meta["schemaString"])),
         "partition_columns": list(meta["partitionColumns"] or []),
-        "meta": meta.asDict(recursive=True),
-        "files": files,
+        "meta": meta,
+        "files": st["files"],
         "checkpoint_version": ckpt_v,
         "json_replayed": len(need),
     }
@@ -2408,7 +2265,10 @@ def delta_write(
         # inherits the table's committed partitionColumns — a sink (e.g.
         # delta_stream_sink) appending to a partitioned table keeps the
         # layout without having to know it.
-        meta = _peek_meta(spark, table, v - 1)
+        try:
+            meta = _peek_meta(table, v - 1)
+        except DeltaProtocolError:
+            meta = None
         df = _complete_generated(df, meta)
         _enforce_constraints(df, meta)
         write_meta = meta
@@ -2592,6 +2452,52 @@ def delta_delete(
     )
 
 
+def _files_with_rows(
+    spark: SparkSession,
+    table: str,
+    state: dict,
+    files: list[dict],
+    select,
+) -> list[dict]:
+    """The plain (DV-free) `files` holding at least one row that
+    `select` keeps — the copy-on-write hit discovery of DELETE, UPDATE
+    and MERGE. `select` maps a scan of `files`, whose `_file` column is
+    each row's input_file_name, to the rows that make their file a hit;
+    one distributed pass collects the distinct hit paths. Matching is by
+    absolute path (not table-relative): a shallow clone's adds point
+    OUTSIDE the table root, where relpath arithmetic would never match
+    and the verb would silently miss them."""
+    scan = _read_state(spark, table, dict(state, files=files)).withColumn(
+        "_file", F.input_file_name()
+    )
+    hit_abs = {
+        os.path.abspath(
+            urllib.parse.unquote(urllib.parse.urlparse(r["_file"]).path)
+        )
+        for r in select(scan).select("_file").distinct().collect()
+    }
+    return [f for f in files if _abs_path(table, f["path"]) in hit_abs]
+
+
+def _rewrite_actions(
+    table: str,
+    version: int,
+    state: dict,
+    rewrite: DataFrame,
+    hit_files: list[dict],
+) -> list[dict]:
+    """The copy-on-write tail of DELETE, UPDATE and MERGE: stage
+    `rewrite` as the commit's new data files, then remove every hit file
+    (a hit file's DV dies with it — the rewrite purges)."""
+    actions = _stage_data_files(
+        rewrite, table, version, state["partition_columns"],
+        meta=state["meta"],
+    )
+    ts = _now_ms()
+    actions.extend({"remove": _remove_action(f, ts, True)} for f in hit_files)
+    return actions
+
+
 def _find_hit_files(
     spark: SparkSession,
     table: str,
@@ -2610,25 +2516,9 @@ def _find_hit_files(
     dv_cands = [f for f in candidates if f.get("deletionVector")]
     hit_files: list[dict] = []
     if plain_cands:
-        cand_state = dict(state, files=plain_cands)
-        full = _read_state(spark, table, cand_state).withColumn(
-            "_file", F.input_file_name()
-        )
-        # Absolute-path matching (not table-relative): a shallow clone's
-        # adds point OUTSIDE the table root, where relpath arithmetic
-        # would never match and a DELETE would silently miss them.
-        hit_abs = {
-            os.path.abspath(
-                urllib.parse.unquote(urllib.parse.urlparse(u).path)
-            )
-            for u in (
-                r["_file"]
-                for r in full.filter(pred).select("_file").distinct().collect()
-            )
-        }
-        hit_files.extend(
-            f for f in plain_cands if _abs_path(table, f["path"]) in hit_abs
-        )
+        hit_files.extend(_files_with_rows(
+            spark, table, state, plain_cands, lambda d: d.filter(pred)
+        ))
     if dv_cands:
         probe = _scan_with_row_index(spark, table, state, dv_cands)
         hit_abs = {
@@ -2721,17 +2611,9 @@ def _delta_update_attempt(
         # re-checked.
         updated = _regenerate(updated, state["meta"])
         _enforce_constraints(updated, state["meta"])
-        rewrite = kept.unionByName(updated)
-        actions.extend(
-            _stage_data_files(
-                rewrite, table, v, state["partition_columns"],
-                meta=state["meta"],
-            )
-        )
-        ts = _now_ms()
-        actions.extend(
-            {"remove": _remove_action(f, ts, True)} for f in hit_files
-        )
+        actions.extend(_rewrite_actions(
+            table, v, state, kept.unionByName(updated), hit_files
+        ))
     return _commit_after_conflict_check(
         spark, table, v, actions,
         {
@@ -2811,19 +2693,9 @@ def _delta_delete_attempt(
     if not use_dv and hit_files:
         # Copy-on-write: re-plan the rewrite scan over ONLY the hit
         # files — I/O proportional to what is rewritten, not the table.
-        # A hit file's old DV dies with it (the rewrite purges).
         hit_state = dict(state, files=hit_files)
         keep = _read_state(spark, table, hit_state).filter(~pred)
-        actions.extend(
-            _stage_data_files(
-                keep, table, v, state["partition_columns"],
-                meta=state["meta"],
-            )
-        )
-        ts = _now_ms()
-        actions.extend(
-            {"remove": _remove_action(f, ts, True)} for f in hit_files
-        )
+        actions.extend(_rewrite_actions(table, v, state, keep, hit_files))
     elif use_dv and candidates:
         # Merge-on-read: ONE fused row-index scan over the stats-pruned
         # candidates does hit discovery AND DV construction (r18,
@@ -2841,7 +2713,7 @@ def _delta_delete_attempt(
         # never by delete cardinality.
         table_abs = os.path.abspath(table)
         old_desc = {
-            os.path.abspath(os.path.join(table, _rel_path(table, f["path"]))):
+            _abs_path(table, f["path"]):
                 (json.dumps(f["deletionVector"])
                  if f.get("deletionVector") else None)
             for f in candidates
@@ -2881,18 +2753,13 @@ def _delta_delete_attempt(
         # matching row) — same membership the two-pass discovery found.
         hit_files = [
             f for f in candidates
-            if os.path.abspath(
-                os.path.join(table, _rel_path(table, f["path"]))
-            ) in desc_by_file
+            if _abs_path(table, f["path"]) in desc_by_file
         ]
         if hit_files:
             actions.extend(_dv_protocol_actions(state))
         ts = _now_ms()
         for f in hit_files:
-            full_path = os.path.abspath(
-                os.path.join(table, _rel_path(table, f["path"]))
-            )
-            descriptor = desc_by_file[full_path]
+            descriptor = desc_by_file[_abs_path(table, f["path"])]
             new_add = dict(f, dataChange=True, deletionVector=descriptor)
             if f.get("stats"):
                 st = json.loads(f["stats"])
@@ -3126,24 +2993,12 @@ def _delta_merge_attempt(
     # candidates are already key-bound pruned so the over-approximation
     # is bounded. The rewrite purges their DVs.
     hit_files = [f for f in candidates if f.get("deletionVector")]
+    keys = source.select(*on)
     if plain_cands:
-        cand_state = dict(state, files=plain_cands)
-        with_file = _read_state(spark, table, cand_state).withColumn(
-            "_file", F.input_file_name()
-        )
-        hit_abs = {
-            os.path.abspath(
-                urllib.parse.unquote(urllib.parse.urlparse(u).path)
-            )
-            for u in (
-                r["_file"]
-                for r in with_file.join(source.select(*on), on, "left_semi")
-                .select("_file").distinct().collect()
-            )
-        }
-        hit_files.extend(
-            f for f in plain_cands if _abs_path(table, f["path"]) in hit_abs
-        )
+        hit_files.extend(_files_with_rows(
+            spark, table, state, plain_cands,
+            lambda d: d.join(keys, on, "left_semi"),
+        ))
     if not_matched_by_source:
         # BY SOURCE widens the rewrite set: any live file may hold an
         # affected UNMATCHED row. A condition stats-prunes the extra
@@ -3153,6 +3008,11 @@ def _delta_merge_attempt(
             prune_files as _prune_files,
         )
 
+        bs_cond = (
+            F.coalesce(F.expr(by_source_condition), F.lit(False))
+            if by_source_condition
+            else F.lit(True)
+        )
         bs_cands = (
             _prune_files(state, by_source_condition)
             if by_source_condition
@@ -3168,40 +3028,15 @@ def _delta_merge_attempt(
         )
         bs_plain = [f for f in bs_extra if not f.get("deletionVector")]
         if bs_plain:
-            bs_cond = (
-                F.coalesce(F.expr(by_source_condition), F.lit(False))
-                if by_source_condition
-                else F.lit(True)
-            )
-            extra_state = dict(state, files=bs_plain)
-            extra_rows = _read_state(spark, table, extra_state).withColumn(
-                "_file", F.input_file_name()
-            )
-            affected = {
-                os.path.abspath(
-                    urllib.parse.unquote(urllib.parse.urlparse(u).path)
-                )
-                for u in (
-                    r["_file"]
-                    for r in extra_rows.filter(bs_cond)
-                    .join(source.select(*on), on, "left_anti")
-                    .select("_file").distinct().collect()
-                )
-            }
-            hit_files.extend(
-                f for f in bs_plain
-                if _abs_path(table, f["path"]) in affected
-            )
+            hit_files.extend(_files_with_rows(
+                spark, table, state, bs_plain,
+                lambda d: d.filter(bs_cond).join(keys, on, "left_anti"),
+            ))
     if hit_files:
         hit_state = dict(state, files=hit_files)
         hit_rows = _read_state(spark, table, hit_state)
-        unmatched = hit_rows.join(source.select(*on), on, "left_anti")
+        unmatched = hit_rows.join(keys, on, "left_anti")
         if not_matched_by_source:
-            bs_cond = (
-                F.coalesce(F.expr(by_source_condition), F.lit(False))
-                if by_source_condition
-                else F.lit(True)
-            )
             kept = unmatched.filter(~bs_cond)
             if not_matched_by_source == "update":
                 cols = [f.name for f in state["schema"].fields]
@@ -3226,20 +3061,9 @@ def _delta_merge_attempt(
         # the source (whose per-key uniqueness the guard above enforced).
         updated = hit_rows.select(*on).join(source, on, "inner")
         rewrite = kept.unionByName(updated).unionByName(inserts)
-        ts = _now_ms()
-        removes = [
-            {"remove": _remove_action(f, ts, True)} for f in hit_files
-        ]
     else:
         rewrite = inserts
-        removes = []
-    actions.extend(
-        _stage_data_files(
-            rewrite, table, v, state["partition_columns"],
-            meta=state["meta"],
-        )
-    )
-    actions.extend(removes)
+    actions.extend(_rewrite_actions(table, v, state, rewrite, hit_files))
     if not_matched_by_source:
         # BY SOURCE reads (and may delete/update) UNMATCHED rows, so the
         # read set is no longer bounded by the source's key range — a
@@ -3569,7 +3393,10 @@ def delta_changes(
 
     before = None
     if from_version >= 0:
-        before = _peek_meta(spark, table, from_version)
+        try:
+            before = _peek_meta(table, from_version)
+        except DeltaProtocolError:
+            pass
     current_json = before["schemaString"] if before else None
     current_parts = _phys_parts(before) if before else None
     for v in need:
@@ -4039,7 +3866,10 @@ def delta_append(
             )
             if seen >= txn[1]:
                 return v - 1  # staged files (if any) are vacuum debris
-        meta = _peek_meta(spark, table, v - 1)
+        try:
+            meta = _peek_meta(table, v - 1)
+        except DeltaProtocolError:
+            meta = None
         # Constraints are checked against the CURRENT head's constraint
         # set — a plain lost race doesn't re-pay the scan, but a
         # concurrent ADD CONSTRAINT must re-validate the staged rows
@@ -4122,30 +3952,6 @@ def delta_stream_sink(table: str, app_id: str):
 # streaming SOURCE: the delta log as a Structured Streaming input
 # --------------------------------------------------------------------------
 
-def _peek_meta_fs(table: str) -> dict:
-    """Newest metaData without a SparkSession (DataSource.schema() runs
-    before any job): scan retained commit JSONs newest-first, else the
-    newest checkpoint's metaData row via a pyarrow read."""
-    for v in sorted(_list_log(table, _VERSION_RE), reverse=True):
-        with open(_version_file(table, v)) as fh:
-            for line in fh:
-                if line.strip():
-                    action = json.loads(line)
-                    if "metaData" in action:
-                        return action["metaData"]
-    ckpts = _checkpoint_versions(table)
-    if ckpts:
-        import pyarrow.parquet as pq
-
-        for part in _checkpoint_parts(table, max(ckpts)):
-            rows = pq.read_table(part, columns=["metaData"]).to_pylist()
-            for r in rows:
-                meta = r.get("metaData")
-                if meta and meta.get("schemaString"):
-                    return meta
-    raise DeltaProtocolError(f"no metaData action found in log of {table}")
-
-
 try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
     from pyspark.sql.datasource import (
         DataSource,
@@ -4185,7 +3991,7 @@ try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
         def __init__(self, table: str):
             self._table = table
             try:
-                meta = _peek_meta_fs(table)
+                meta = _peek_meta(table)
                 self._part_inject = DeltaCdfStreamReader._partition_injection(
                     meta
                 )
@@ -4258,7 +4064,7 @@ try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
             return "delta_log_stream"
 
         def schema(self):
-            meta = _peek_meta_fs(self.options["path"])
+            meta = _peek_meta(self.options["path"])
             # Validate partition-column injectability HERE, with a named
             # reason — not executor-side with an Arrow type error.
             DeltaCdfStreamReader._partition_injection(meta)
@@ -4445,7 +4251,7 @@ try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
             # giving up fresh-start pacing (where the cursor's initial
             # value is authoritative because no checkpoint exists).
             try:
-                meta = _peek_meta_fs(table)
+                meta = _peek_meta(table)
                 self._schema_json = meta["schemaString"]
                 self._part_inject = self._partition_injection(meta)
                 self._col_map = self._column_map(meta)
@@ -4675,7 +4481,7 @@ try:  # pyspark.sql.datasource: Spark 4 Python DataSource API
             return "delta_cdf_stream"
 
         def schema(self):
-            meta = _peek_meta_fs(self.options["path"])
+            meta = _peek_meta(self.options["path"])
             # Validate partition-column injectability HERE, with a named
             # reason — not executor-side with an Arrow type error.
             DeltaCdfStreamReader._partition_injection(meta)

@@ -1198,7 +1198,7 @@ def test_append_retry_rechecks_concurrently_added_constraint(
     def racing_commit(table, version, actions):
         if not fired["done"] and any("add" in a for a in actions):
             fired["done"] = True
-            meta = dl._peek_meta_fs(table)
+            meta = dl._peek_meta(table)
             conf = dict(meta.get("configuration") or {})
             conf["delta.constraints.pos"] = "val >= 0"
             real_commit(table, version, [
@@ -1962,45 +1962,114 @@ def test_metadata_cleanup_respects_checkpoint_and_retention(spark, tmp_path):
     assert dl.delta_cleanup_metadata(spark, tbl2) == []
 
 
-def test_driver_and_spark_replay_agree(spark, tmp_path, monkeypatch):
-    """The size-gated driver-side replay and the distributed Spark replay
-    must reconcile IDENTICAL state — files (incl. DV identity keys),
-    tombstones, metaData, protocol, txn watermarks, and the replay
-    accounting — across appends, a partitioned layout, a checkpoint base
-    and a copy-on-write delete."""
+def test_replay_state_matches_history(spark, tmp_path):
+    """Replayed state equals what the operations committed — live keys
+    read back from the live files, file and tombstone counts, the txn
+    watermark, the replay accounting, protocol, schema and partition
+    columns — across appends, a partitioned layout, a checkpoint base
+    and a copy-on-write delete. Replay itself starts no Spark job."""
+    import pyarrow.parquet as pq
+
     tbl = str(tmp_path / "t")
-    dl.delta_write(
+    dl.delta_write(  # v0: two files in g=a
         spark, _df(spark, 0, 40, "a").repartition(2), tbl,
         partition_by=["g"],
     )
-    for i in range(6):  # crosses CHECKPOINT_INTERVAL
+    for i in range(6):  # v1..v6: one g=b file each; checkpoint at v4
         dl.delta_write(
             spark, _df(spark, 40 + 10 * i, 50 + 10 * i, "b").repartition(1),
             tbl, mode="append", txn=("app-replay", i),
         )
+    # v7: removes the v5 and v6 files; every row in them matches
     dl.delta_delete(spark, tbl, "k >= 80")
 
-    def canon(st):
-        return {
-            "files": sorted(
-                json.dumps(f, sort_keys=True) for f in st["files"]
-            ),
-            "tombstones": sorted(
-                json.dumps(f, sort_keys=True) for f in st["tombstones"]
-            ),
-            "protocol": st["protocol"],
-            "meta": st["meta"],
-            "txns": st["txns"],
-            "version": st["version"],
-            "checkpoint_version": st["checkpoint_version"],
-            "json_replayed": st["json_replayed"],
-            "schema": st["schema"].json(),
-            "partition_columns": st["partition_columns"],
-        }
+    # version -> (live keys, files, tombstones, txns, checkpoint, JSONs)
+    expected = {
+        None: (range(80), 6, 2, {"app-replay": 5}, 4, 3),
+        0: (range(40), 2, 0, {}, None, 1),
+        3: (range(70), 5, 0, {"app-replay": 2}, None, 4),
+        7: (range(80), 6, 2, {"app-replay": 5}, 4, 3),
+    }
+    sc = spark.sparkContext
+    sc.setJobGroup("replay-probe", "snapshot replay")
+    try:
+        states = {v: dl._snapshot_state(spark, tbl, v) for v in expected}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("replay-probe") == []
+    for v, (keys, n_files, n_tomb, txns, ckpt, n_json) in expected.items():
+        st = states[v]
+        live = sorted(
+            k
+            for f in st["files"]
+            for k in pq.read_table(
+                os.path.join(tbl, f["path"]), columns=["k"]
+            ).column("k").to_pylist()
+        )
+        assert live == list(keys), v
+        assert len(st["files"]) == n_files, v
+        assert len(st["tombstones"]) == n_tomb, v
+        assert st["txns"] == txns, v
+        assert st["version"] == (7 if v is None else v)
+        assert st["checkpoint_version"] == ckpt, v
+        assert st["json_replayed"] == n_json, v
+        assert st["protocol"] == {"minReaderVersion": 1, "minWriterVersion": 2}
+        assert st["schema"].simpleString() == "struct<k:bigint,g:string>"
+        assert st["partition_columns"] == ["g"]
 
-    for v in (None, 0, 3, dl.latest_version(tbl)):
-        drv = dl._snapshot_state(spark, tbl, v)
-        monkeypatch.setattr(dl, "_DRIVER_REPLAY_MAX_BYTES", -1)
-        spk = dl._snapshot_state(spark, tbl, v)
-        monkeypatch.undo()
-        assert canon(drv) == canon(spk), f"replay paths diverge at v={v}"
+
+def test_peek_meta_falls_back_to_checkpoint(spark, tmp_path):
+    """With the commit JSONs up to the checkpoint deleted, the metaData
+    peek reads the checkpoint's metaData column, normalized like a JSON
+    action (maps as dicts), and finds none below the checkpoint."""
+    tbl = str(tmp_path / "t")
+    for i in range(5):  # v0..v4; checkpoint at v4
+        dl.delta_write(spark, _df(spark, 10 * i, 10 * i + 10), tbl)
+    for v in range(5):
+        os.remove(dl._version_file(tbl, v))
+    meta = dl._peek_meta(tbl)
+    assert meta["format"] == {"provider": "parquet", "options": {}}
+    assert meta["configuration"] == {}
+    assert dl._peek_meta(tbl, 4) == meta
+    with pytest.raises(dl.DeltaProtocolError, match="no metaData"):
+        dl._peek_meta(tbl, 3)
+
+
+def test_replay_skips_actions_missing_required_fields(spark, tmp_path):
+    """An add/remove without a path names no file and a txn without a
+    version sets no watermark: replay skips them instead of keeping a
+    `None` path or a version-0 watermark."""
+    tbl = tmp_path / "t"
+    (tbl / "_delta_log").mkdir(parents=True)
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}},
+    ]}
+    add = {"partitionValues": {}, "size": 1, "modificationTime": 0,
+           "dataChange": True}
+    commits = [
+        [
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+            {"metaData": {"id": "m", "format": {"provider": "parquet"},
+                          "schemaString": json.dumps(schema),
+                          "partitionColumns": [], "configuration": {}}},
+            {"add": {"path": "a.parquet", **add}},
+            {"add": {"path": None, **add}},
+            {"txn": {"appId": "null-only", "version": None}},
+            {"txn": {"appId": "app", "version": 3}},
+        ],
+        [
+            {"remove": {"path": None, "deletionTimestamp": 1,
+                        "dataChange": True,
+                        "deletionVector": {"storageType": "u",
+                                           "pathOrInlineDv": "dv"}}},
+            {"txn": {"appId": "app", "version": None}},
+        ],
+    ]
+    for v, actions in enumerate(commits):
+        (tbl / "_delta_log" / f"{v:020d}.json").write_text(
+            "".join(json.dumps(a) + "\n" for a in actions)
+        )
+    st = dl._snapshot_state(spark, str(tbl))
+    assert [f["path"] for f in st["files"]] == ["a.parquet"]
+    assert st["tombstones"] == []
+    assert st["txns"] == {"app": 3}

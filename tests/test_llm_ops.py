@@ -514,3 +514,32 @@ def test_bpe_train_generations_invariants(spark, sf_dir):
         if prev_total is not None:
             assert r["total_symbols_after"] == prev_total - r["n_merges"]
         prev_total = r["total_symbols_after"]
+
+
+def test_embedding_near_dup_null_label_gives_null(spark, sf_dir, tmp_path):
+    """same_label is SQL equality, like the oracle's `a.label = b.label`:
+    a pair with a NULL label gets a NULL same_label, not False."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    emb = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    null_vec = S.dedup_embedding_cosine(spark, sf_dir).first()["vec_a"]
+    ids = emb.column("vec_id").to_pylist()
+    labels = [
+        None if v == null_vec else lab
+        for v, lab in zip(ids, emb.column("label").to_pylist())
+    ]
+    field = emb.schema.field("label")
+    pq.write_table(
+        emb.set_column(
+            emb.schema.get_field_index("label"), field,
+            pa.array(labels, field.type),
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    label = dict(zip(ids, labels))
+    rows = S.dedup_embedding_cosine(spark, str(tmp_path)).collect()
+    assert any(null_vec in (r["vec_a"], r["vec_b"]) for r in rows)
+    for r in rows:
+        la, lb = label[r["vec_a"]], label[r["vec_b"]]
+        assert r["same_label"] == (None if None in (la, lb) else la == lb)
